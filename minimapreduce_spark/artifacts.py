@@ -1,15 +1,40 @@
-"""Artifact retention (VACUUM) for the persisted index/view families.
+"""Publish and retention for the persisted index/view artifacts.
 
-Every artifact family in the engine shares one storage discipline:
-a deterministic base root (``minimapreduce_minhash_<tag>``,
-``minimapreduce_ivfpq_<tag>``, ``minimapreduce_joinview_<tag>``)
-published by atomic rename, then derived roots whose names STRICTLY
-EXTEND the parent's — ``<root>_<sha8(tag)>`` for appends (chainable),
-``<root>_compact`` for compactions, ``<root>_rebuilt`` /
+Every persisted artifact in the engine — the MinHash band index, the
+IVF-PQ index, the materialized join view, and every append, compaction
+and rebuild derived from them — is written through `publish`, the one
+place the storage discipline lives. The engine tolerates faults by
+re-running work, so a builder may run twice, concurrently, or die
+half-way; `publish` makes each root appear whole, exactly once:
+
+  - a root whose family marker subdir (``FAMILIES``: ``buckets``,
+    ``codes``, ``view``) exists is published — it is returned without
+    running the builder's Spark work at all;
+  - otherwise the builder writes into a private stage directory
+    created NEXT TO the root (same filesystem, so the final
+    ``os.rename`` is atomic) and named outside every family prefix
+    (no listing of published roots ever sees it in flight);
+  - a derived root records its parent's basename in a ``_PARENT``
+    file inside the stage (`claim_parent`), so the claim publishes
+    atomically with the data;
+  - the stage is renamed into place. If the rename fails and the root
+    now carries the marker, a rival published first: its copy is
+    served and the stage discarded. Any other failure removes the
+    stage and raises — a root that does not exist is never reported
+    as published.
+
+Roots are named by `fingerprint_root`: a deterministic base root
+(``minimapreduce_minhash_<tag>``, ``minimapreduce_ivfpq_<tag>``,
+``minimapreduce_joinview_<tag>``) keyed by the fixture path and its
+input tables' content fingerprints, then derived roots whose names
+STRICTLY EXTEND the parent's — ``<root>_<sha8(tag)>`` for appends
+(chainable), ``<root>_compact`` for compactions, ``<root>_rebuilt`` /
 ``<root>_stream_rebuilt`` for the IVM fold-ins. Appends fold the
-parent's data files in as HARDLINKS, so a derived root is
+parent's data files in as HARDLINKS (`fold_in`), so a derived root is
 self-contained: unlinking the parent's directory entries decrements
 link counts but never destroys an inode a derived root still names.
+`read_minhash_index` / `read_ivfpq_index` are the one read path of each
+index family.
 
 That gives retention a DERIVATION-AWARE liveness rule (round-11, the
 round-10 ADVICE fix — the earlier purely name-based rule had false
@@ -17,16 +42,12 @@ positives: ``ivfpq_base_index_build`` publishes at
 ``<full-index-root>_base13``, a SIBLING whose name extends the live
 full index's without deriving from it, so a name-based vacuum would
 delete a live serving artifact whose data the sibling does NOT
-hardlink-protect):
-
-  every derived root (append / compact / rebuild) records its parent's
-  basename in a ``_PARENT`` marker file written into the stage BEFORE
-  the atomic publish; a published root is SUPERSEDED iff some other
-  PUBLISHED root explicitly CLAIMS it as parent. Unclaimed roots —
-  leaves, siblings, independently-built bases — are live. A root
-  published before this discipline carries no claim and therefore
-  never supersedes anything (the safe direction: storage kept, never
-  data destroyed).
+hardlink-protect): a published root is SUPERSEDED iff some other
+PUBLISHED root explicitly CLAIMS it as parent. Unclaimed roots —
+leaves, siblings, independently-built bases — are live. A root
+published before this discipline carries no claim and therefore
+never supersedes anything (the safe direction: storage kept, never
+data destroyed).
 
 ``vacuum_superseded_roots`` deletes superseded roots once the grace
 window has elapsed SINCE SUPERSESSION — age is measured from the
@@ -41,28 +62,148 @@ At 100 TB this is the table-format VACUUM/`expire_snapshots` job: the
 append chain is the snapshot log, compaction is rewrite, and retention
 bounds storage at O(live artifacts) instead of O(all history). It is
 a scheduled maintenance job, not a query — evidence lives in pytest
-(liveness, hardlink survival, grace window) and
+(liveness, hardlink survival, grace window, publish failure modes) and
 ``tools/retention_probe.py`` (measured reclaim at sf0.1).
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import shutil
+import tempfile
 import time
+from typing import Callable
 
+
+# family descriptors: (root-name prefix, published-marker subdir)
+FAMILIES: dict[str, tuple[str, str]] = {
+    "minhash_band_index": ("minimapreduce_minhash_", "buckets"),
+    "ivfpq_index": ("minimapreduce_ivfpq_", "codes"),
+    "join_view": ("minimapreduce_joinview_", "view"),
+}
 
 PARENT_MARKER = "_PARENT"
+# name prefix `fold_in` stamps on every hardlinked parent data file
+BASE_STAMP = "base-"
+
+# explicit artifact-read schemas: a zero-row corpus side (every doc in
+# the batch) publishes a buckets dir with no data files, and a
+# schema-less read would crash with 'Unable to infer schema' instead of
+# returning the correct empty frame (round-9 review finding)
+MINHASH_BUCKET_SCHEMA = "doc_id bigint, bh bigint, band int"
+MINHASH_SHINGLE_SCHEMA = "doc_id bigint, h bigint"
+
+
+def publish(
+    root: str,
+    family: str,
+    write: Callable[[str], None],
+    parent: str | None = None,
+) -> str:
+    """Publish the artifact ``write(stage)`` produces at ``root`` and
+    return ``root`` — the storage discipline in the module docstring.
+    ``write`` does all the Spark work, so an already-published root
+    costs no job; ``parent`` (a root path) is recorded as the
+    derivation claim of an append, compaction or rebuild."""
+    marker = FAMILIES[family][1]
+    if _published(root, marker):
+        return root
+    full = os.path.abspath(root)
+    stage = tempfile.mkdtemp(
+        prefix=f"stage-{os.path.basename(full)}-", dir=os.path.dirname(full)
+    )
+    try:
+        write(stage)
+        if parent is not None:
+            claim_parent(stage, parent)
+        try:
+            os.rename(stage, root)
+        except OSError:
+            if not _published(root, marker):
+                raise
+            # lost the race: a rival published first, serve its copy
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)  # gone after a rename
+    return root
 
 
 def claim_parent(stage_or_root: str, parent_root: str) -> None:
     """Record inside a derived root WHICH root it was derived from —
-    called by every append/compact/rebuild publisher on its staging
-    dir before the atomic rename, so the claim is part of the same
-    all-or-nothing publish. The claim is what makes a parent
-    vacuum-able: retention never infers derivation from names."""
+    `publish` writes it into the stage before the atomic rename, so
+    the claim is part of the same all-or-nothing publish. The claim is
+    what makes a parent vacuum-able: retention never infers derivation
+    from names."""
     with open(os.path.join(stage_or_root, PARENT_MARKER), "w") as f:
         f.write(os.path.basename(os.path.normpath(parent_root)))
+
+
+def fold_in(stage: str, base_root: str, subdirs: tuple[str, ...]) -> None:
+    """Hardlink every parquet data file under ``base_root``'s
+    ``subdirs`` into the same relative dirs of ``stage``, stamped
+    ``BASE_STAMP`` — the append's manifest fold-in: zero bytes copied,
+    zero corpus-side compute, and partition dirs (``band=N``,
+    ``label=N``) keep pruning because the links land inside them."""
+    for sub in subdirs:
+        src_dir = os.path.join(base_root, sub)
+        for dirpath, _dirs, files in os.walk(src_dir):
+            dst_dir = os.path.normpath(
+                os.path.join(stage, sub, os.path.relpath(dirpath, src_dir))
+            )
+            os.makedirs(dst_dir, exist_ok=True)
+            for f in files:
+                if f.endswith(".parquet"):
+                    os.link(
+                        os.path.join(dirpath, f),
+                        os.path.join(dst_dir, BASE_STAMP + f),
+                    )
+
+
+def fingerprint_root(
+    family: str, sf_dir: str, tables: tuple[str, ...], *extra: str
+) -> str:
+    """Deterministic base root of ``family`` for a fixture dir, in the
+    temp dir: keyed by the ABSOLUTE fixture path, the CONTENT
+    FINGERPRINT of each input table (`catalog.content_fingerprint`) and
+    any ``extra`` build parameters, so a regenerated fixture or a
+    different parameter gets a fresh root instead of a stale artifact.
+    NOT session-keyed — write-once/serve-many across sessions is the
+    point; concurrent builders meet in `publish`."""
+    from minimapreduce_spark.catalog import content_fingerprint, table_path
+
+    parts = [os.path.abspath(sf_dir)]
+    parts += [content_fingerprint(table_path(sf_dir, t)) for t in tables]
+    tag = hashlib.sha256("|".join([*parts, *extra]).encode()).hexdigest()[:16]
+    return os.path.join(tempfile.gettempdir(), FAMILIES[family][0] + tag)
+
+
+def read_minhash_index(spark, root: str):
+    """(buckets, shingles) frames of a published band-index root, read
+    through the explicit schemas, ``band`` cast back to int."""
+    from pyspark.sql import functions as F
+
+    buckets = (
+        spark.read.schema(MINHASH_BUCKET_SCHEMA)
+        .parquet(os.path.join(root, "buckets"))
+        .select("doc_id", F.col("band").cast("int").alias("band"), "bh")
+    )
+    shingles = spark.read.schema(MINHASH_SHINGLE_SCHEMA).parquet(
+        os.path.join(root, "shingles")
+    )
+    return buckets, shingles
+
+
+def read_ivfpq_index(spark, root: str):
+    """(centroids, codebook, codes) frames of a published IVF-PQ root,
+    the partition column ``label`` cast back to int."""
+    from pyspark.sql import functions as F
+
+    cg = spark.read.parquet(os.path.join(root, "centroids"))
+    cb = spark.read.parquet(os.path.join(root, "codebook"))
+    codes = spark.read.parquet(os.path.join(root, "codes")).select(
+        "vec_id", F.col("label").cast("int").alias("label"), "code", "n2hat"
+    )
+    return cg, cb, codes
 
 
 def _claimed_parent(root: str) -> str | None:
@@ -75,6 +216,30 @@ def _claimed_parent(root: str) -> str | None:
 
 def _published(root: str, marker: str) -> bool:
     return os.path.isdir(os.path.join(root, marker))
+
+
+def _list_roots(
+    parent: str, prefix: str, marker: str
+) -> tuple[list[str], dict[str, str | None]]:
+    """The one listing of a family's roots under ``parent``: (names of
+    unpublished dirs, {published root name: the parent it claims or
+    None}), both in name order. `publish` stages outside every family
+    prefix, so an in-flight stage appears in neither."""
+    try:
+        names = sorted(os.listdir(parent))
+    except FileNotFoundError:
+        names = []
+    unpublished: list[str] = []
+    published: dict[str, str | None] = {}
+    for n in names:
+        full = os.path.join(parent, n)
+        if not n.startswith(prefix) or not os.path.isdir(full):
+            continue
+        if _published(full, marker):
+            published[n] = _claimed_parent(full)
+        else:
+            unpublished.append(n)
+    return unpublished, published
 
 
 def _tree_sizes(root: str) -> tuple[int, int]:
@@ -127,28 +292,10 @@ def vacuum_superseded_roots(
     Returns a report dict; with ``dry_run`` nothing is removed but the
     report shows what would be."""
     now = time.time()
-    try:
-        names = sorted(os.listdir(parent))
-    except FileNotFoundError:
-        return {
-            "deleted": [],
-            "kept_live": [],
-            "kept_young": [],
-            "kept_unpublished": [],
-            "unlinked_bytes": 0,
-            "freed_bytes": 0,
-            "dry_run": dry_run,
-        }
-    roots = [
-        n
-        for n in names
-        if n.startswith(prefix) and os.path.isdir(os.path.join(parent, n))
-    ]
-    published = {n for n in roots if _published(os.path.join(parent, n), marker)}
+    unpublished, published = _list_roots(parent, prefix, marker)
     # parent name -> mtimes of the published roots claiming it
     claims: dict[str, list[float]] = {}
-    for n in published:
-        p = _claimed_parent(os.path.join(parent, n))
+    for n, p in published.items():
         if p and p != n:
             try:
                 claims.setdefault(p, []).append(
@@ -160,12 +307,12 @@ def vacuum_superseded_roots(
         "deleted": [],
         "kept_live": [],
         "kept_young": [],
-        "kept_unpublished": sorted(set(roots) - published),
+        "kept_unpublished": unpublished,
         "unlinked_bytes": 0,
         "freed_bytes": 0,
         "dry_run": dry_run,
     }
-    for n in sorted(published):
+    for n in published:
         if n not in claims:
             report["kept_live"].append(n)
             continue
@@ -184,22 +331,12 @@ def vacuum_superseded_roots(
     return report
 
 
-# family descriptors: (root-name prefix, published-marker subdir)
-FAMILIES: dict[str, tuple[str, str]] = {
-    "minhash_band_index": ("minimapreduce_minhash_", "buckets"),
-    "ivfpq_index": ("minimapreduce_ivfpq_", "codes"),
-    "join_view": ("minimapreduce_joinview_", "view"),
-}
-
-
 def vacuum_all_families(
     parent: str | None = None, min_age_s: float = 0.0, dry_run: bool = False
 ) -> dict[str, dict]:
     """Run retention over every artifact family in one sweep (the
     scheduled nightly job). ``parent`` defaults to the tempdir the
     deterministic roots publish into."""
-    import tempfile
-
     parent = parent or tempfile.gettempdir()
     return {
         fam: vacuum_superseded_roots(parent, prefix, marker, min_age_s, dry_run)
@@ -211,8 +348,8 @@ def _fragmented(root: str, marker: str) -> bool:
     """True iff the root carries an append's footprint anywhere —
     which compaction removes:
 
-      - any ``base-*.parquet`` file in ANY data subdir: the hardlink
-        fold-in prefix both appenders stamp on every parent file
+      - any ``BASE_STAMP``-prefixed parquet file in ANY data subdir:
+        the stamp `fold_in` puts on every hardlinked parent file
         (round-10 ADVICE: appends fragment the OTHER artifact tables
         too — minhash ``shingles``, IVF-PQ ``centroids``/``codebook``
         — so the probe must walk the whole root, not just the
@@ -224,10 +361,10 @@ def _fragmented(root: str, marker: str) -> bool:
     The other tables' compacted layouts are a bounded handful of
     files by contract (shingles repartition(4), centroids/codebook
     repartition(1)), so a bare file-count probe there would re-flag a
-    freshly compacted root forever; the ``base-`` stamp is the
+    freshly compacted root forever; the fold-in stamp is the
     append-specific signal that keeps the nightly job idempotent."""
     for dirpath, _dirs, files in os.walk(root):
-        if any(f.startswith("base-") and f.endswith(".parquet") for f in files):
+        if any(f.startswith(BASE_STAMP) and f.endswith(".parquet") for f in files):
             return True
     base = os.path.join(root, marker)
     for dirpath, _dirs, files in os.walk(base):
@@ -259,8 +396,6 @@ def nightly_maintenance(
     Idempotent by construction: a compacted leaf is not fragmented, so
     the second run compacts nothing; vacuum with nothing superseded
     deletes nothing."""
-    import tempfile
-
     from minimapreduce_spark.operators.dedup import minhash_index_compact
     from minimapreduce_spark.operators.similarity import ivfpq_index_compact
 
@@ -272,21 +407,10 @@ def nightly_maintenance(
     compacted: dict[str, list[str]] = {}
     for fam, compactor in compactors.items():
         prefix, marker = FAMILIES[fam]
-        try:
-            names = sorted(os.listdir(parent))
-        except FileNotFoundError:
-            names = []
-        published = [
-            n
-            for n in names
-            if n.startswith(prefix)
-            and _published(os.path.join(parent, n), marker)
-        ]
+        _unpublished, published = _list_roots(parent, prefix, marker)
         # leaf = published root no other published root claims as
         # parent (the vacuum rule's derivation-aware liveness)
-        claimed = {
-            _claimed_parent(os.path.join(parent, n)) for n in published
-        } - {None}
+        claimed = {p for n, p in published.items() if p != n}
         leaves = [n for n in published if n not in claimed]
         compacted[fam] = []
         for n in leaves:

@@ -48,6 +48,14 @@ from pyspark.sql.window import Window as W
 
 import os
 
+from minimapreduce_spark.artifacts import (  # noqa: F401 (schemas re-exported)
+    MINHASH_BUCKET_SCHEMA,
+    MINHASH_SHINGLE_SCHEMA,
+    fold_in,
+    fingerprint_root,
+    publish,
+    read_minhash_index,
+)
 from minimapreduce_spark.catalog import fan_out, load_table, table_path
 from minimapreduce_spark.registry import register
 
@@ -687,14 +695,6 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# explicit artifact-read schemas: a zero-row corpus side (every doc in
-# the batch) publishes a buckets dir with no data files, and a
-# schema-less read would crash with 'Unable to infer schema' instead of
-# returning the correct empty frame (round-9 review finding)
-MINHASH_BUCKET_SCHEMA = "doc_id bigint, bh bigint, band int"
-MINHASH_SHINGLE_SCHEMA = "doc_id bigint, h bigint"
-
-
 def minhash_index_root(sf_dir: str, batch_mod: int | None = None) -> str:
     """Deterministic on-disk location of the persisted MinHash band
     index for a fixture dir — the `ivfpq_index_root` discipline applied
@@ -706,19 +706,12 @@ def minhash_index_root(sf_dir: str, batch_mod: int | None = None) -> str:
     never share one artifact — round-9 review finding), so a
     regenerated fixture gets a fresh root instead of silently probing a
     stale index; NOT session-keyed (write-once/probe-many across
-    sessions is the point). Concurrency is handled by the atomic-rename
-    publish in `minhash_index_build`."""
-    import hashlib
-    import tempfile
-
-    from minimapreduce_spark.catalog import content_fingerprint, table_path
-
+    sessions is the point). Named by `artifacts.fingerprint_root`."""
     if batch_mod is None:
         batch_mod = INCR_BATCH_MOD
-    fp = content_fingerprint(table_path(sf_dir, "documents"))
-    key = f"{os.path.abspath(sf_dir)}|{fp}|m{batch_mod}"
-    tag = hashlib.sha256(key.encode()).hexdigest()[:16]
-    return os.path.join(tempfile.gettempdir(), f"minimapreduce_minhash_{tag}")
+    return fingerprint_root(
+        "minhash_band_index", sf_dir, ("documents",), f"m{batch_mod}"
+    )
 
 
 def minhash_index_build(
@@ -745,44 +738,44 @@ def minhash_index_build(
     rows (doc_id % batch_mod != 0), matching the registered probe's
     batch predicate by construction.
 
-    Publish is ATOMIC: build in a unique temp dir, os.rename into
-    place; a racing builder loses the rename and discards its copy, so
-    concurrent sessions share one artifact and never observe a
-    half-written index. Rebuild happens only when the root is absent;
-    the artifact is a deterministic pure function of the fixture
+    Published by `artifacts.publish` (built only when the root is
+    absent; concurrent builders share one whole artifact). The
+    artifact is a deterministic pure function of the fixture
     (xxhash shingles/signatures, no RNG), which is what makes
     probe-from-artifact ≡ inline-recompute — pinned in pytest both
     frame-by-frame (DuckDB reading the artifact parquet) and
     end-to-end (probe output == `dedup_minhash_incremental`)."""
-    import shutil
-    import tempfile
 
-    root = root or minhash_index_root(sf_dir, batch_mod)
-    if os.path.isdir(os.path.join(root, "buckets")):
-        return root
-    corpus = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .where(F.col("doc_id") % batch_mod != 0)
+    def write(stage: str) -> None:
+        corpus = (
+            load_table(spark, sf_dir, "documents")
+            .select("doc_id", "text")
+            .where(F.col("doc_id") % batch_mod != 0)
+        )
+        base = shingle_hashes(
+            spark, sf_dir, distinct=False, docs=fan_out(spark, corpus)
+        ).localCheckpoint(eager=False)
+        buckets = minhash_band_buckets(
+            minhash_signatures(spark, sf_dir, shingles=base)
+        )
+        _write_band_tables(stage, buckets, base.distinct())
+
+    return publish(
+        root or minhash_index_root(sf_dir, batch_mod), "minhash_band_index", write
     )
-    base = shingle_hashes(
-        spark, sf_dir, distinct=False, docs=fan_out(spark, corpus)
-    ).localCheckpoint(eager=False)
-    sigs = minhash_signatures(spark, sf_dir, shingles=base)
-    buckets = minhash_band_buckets(sigs)
-    stage = tempfile.mkdtemp(prefix="minhash_build_")
+
+
+def _write_band_tables(stage: str, buckets: DataFrame, shingles: DataFrame) -> None:
+    """The band-index layout: ``buckets`` partitioned by band (one task
+    per band, so a fresh or compacted partition holds one file),
+    ``shingles`` as given."""
     (
         buckets.repartition("band")
         .write.mode("overwrite")
         .partitionBy("band")
         .parquet(os.path.join(stage, "buckets"))
     )
-    base.distinct().write.mode("overwrite").parquet(os.path.join(stage, "shingles"))
-    try:
-        os.rename(stage, root)
-    except OSError:
-        shutil.rmtree(stage, ignore_errors=True)  # lost the race: reuse winner's
-    return root
+    shingles.write.mode("overwrite").parquet(os.path.join(stage, "shingles"))
 
 
 def probe_band_index(
@@ -845,12 +838,13 @@ def dedup_minhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the operational 100 TB shape `dedup_minhash_incremental` documents
     but (as the correctness/composition baseline) recomputes inline:
     `minhash_index_build` persists the corpus-side band index and
-    shingle sets ONCE (atomic-rename parquet, buckets partitioned by
-    band), and this query's probe run shingles/signs/bands ONLY the
-    arrival batch (doc_id % INCR_BATCH_MOD == 0), joins the batch
-    buckets against artifact buckets ∪ batch buckets on (band, bh) —
-    batch-internal pairs fall out of the same join — and verifies exact
-    Jaccard with corpus shingle sets read from the artifact. Zero
+    shingle sets ONCE (parquet via `artifacts.publish`, buckets
+    partitioned by band), and this query's probe run shingles/signs/
+    bands ONLY the arrival batch (doc_id % INCR_BATCH_MOD == 0), joins
+    the batch buckets against artifact buckets ∪ batch buckets on
+    (band, bh) — batch-internal pairs fall out of the same join — and
+    verifies exact Jaccard with corpus shingle sets read from the
+    artifact. Zero
     corpus-side shingling, signing or banding jobs in the probe run
     (plan-pinned in pytest: the only documents scans are
     batch-filtered; the corpus side is parquet artifact scans).
@@ -875,14 +869,7 @@ def dedup_minhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             [], "doc_a bigint, doc_b bigint, n_common bigint, jaccard double"
         )
     root = minhash_index_build(spark, sf_dir)
-    idx_buckets = (
-        spark.read.schema(MINHASH_BUCKET_SCHEMA)
-        .parquet(os.path.join(root, "buckets"))
-        .select("doc_id", F.col("band").cast("int").alias("band"), "bh")
-    )
-    idx_shingles = spark.read.schema(MINHASH_SHINGLE_SCHEMA).parquet(
-        os.path.join(root, "shingles")
-    )
+    idx_buckets, idx_shingles = read_minhash_index(spark, root)
 
     batch = docs.where(F.col("doc_id") % INCR_BATCH_MOD == 0)
     buckets_b, shingles_b = _batch_band_frames(spark, sf_dir, batch)
@@ -937,10 +924,10 @@ def minhash_index_append(
     HARDLINK the base artifact's data files alongside them (metadata-
     only, never rewrites corpus bytes — the manifest-append discipline
     of log-structured table formats: an append adds files to the
-    partition, it does not compact yesterday), (4) atomic-rename
-    publish. A racing appender loses the rename and reuses the
-    winner's copy; the appended artifact is a deterministic pure
-    function of (fixture, batch predicate), which is what makes
+    partition, it does not compact yesterday — `artifacts.fold_in`),
+    (4) `artifacts.publish` with the base as the claimed parent. The
+    appended artifact is a deterministic pure function of (fixture,
+    batch predicate), which is what makes
     probe-after-append ≡ full rebuild — pinned in pytest frame-by-
     frame against `minhash_index_build` over corpus ∪ batch.
 
@@ -948,46 +935,13 @@ def minhash_index_append(
     land inside the same band=N partition dirs the base files link
     into. Returns the appended artifact's root."""
     import hashlib
-    import shutil
-    import tempfile
 
-    if root is None:
-        root = f"{base_root}_{hashlib.sha256(tag.encode()).hexdigest()[:8]}"
-    if os.path.isdir(os.path.join(root, "buckets")):
-        return root
-    buckets_b, shingles_b = _batch_band_frames(spark, sf_dir, batch)
-    stage = tempfile.mkdtemp(prefix="minhash_append_")
-    (
-        buckets_b.repartition("band")
-        .write.mode("overwrite")
-        .partitionBy("band")
-        .parquet(os.path.join(stage, "buckets"))
-    )
-    shingles_b.write.mode("overwrite").parquet(os.path.join(stage, "shingles"))
-    # fold the base artifact in by hardlink: one link per data file,
-    # zero bytes copied, zero corpus-side compute
-    for sub in ("buckets", "shingles"):
-        src_dir = os.path.join(base_root, sub)
-        for dirpath, _dirs, files in os.walk(src_dir):
-            rel = os.path.relpath(dirpath, src_dir)
-            dst_dir = os.path.join(stage, sub, rel) if rel != "." else os.path.join(stage, sub)
-            os.makedirs(dst_dir, exist_ok=True)
-            for f in files:
-                if f.endswith(".parquet"):
-                    os.link(
-                        os.path.join(dirpath, f),
-                        os.path.join(dst_dir, f"base-{f}"),
-                    )
-    # derivation claim for retention (artifacts.vacuum_superseded_roots):
-    # written into the stage so it publishes atomically with the data
-    from minimapreduce_spark.artifacts import claim_parent
+    def write(stage: str) -> None:
+        _write_band_tables(stage, *_batch_band_frames(spark, sf_dir, batch))
+        fold_in(stage, base_root, ("buckets", "shingles"))
 
-    claim_parent(stage, base_root)
-    try:
-        os.rename(stage, root)
-    except OSError:
-        shutil.rmtree(stage, ignore_errors=True)  # lost the race: reuse winner's
-    return root
+    root = root or f"{base_root}_{hashlib.sha256(tag.encode()).hexdigest()[:8]}"
+    return publish(root, "minhash_band_index", write, parent=base_root)
 
 
 def minhash_index_compact(
@@ -1002,8 +956,8 @@ def minhash_index_compact(
     by construction — the same rows, read back through the explicit
     artifact schemas and re-written with `repartition("band")` +
     `partitionBy("band")` so each band's rows land in exactly one
-    task → one file per band dir on disk. Atomic-rename publish, same
-    racing-loser discipline as build/append.
+    task → one file per band dir on disk. Published by
+    `artifacts.publish` with the fragmented root as the claimed parent.
 
     This is the half of the LSM contract append deliberately defers:
     append is O(batch compute + #files metadata) and leaves small
@@ -1012,36 +966,13 @@ def minhash_index_compact(
     job, not part of the probe path). Zero documents-table scans —
     pytest-pinned, along with compact(append(append)) ≡ rebuild
     row-set equality and the one-file-per-band layout."""
-    import shutil
-    import tempfile
+
+    def write(stage: str) -> None:
+        buckets, shingles = read_minhash_index(spark, root)
+        _write_band_tables(stage, buckets, shingles.repartition(4))
 
     out_root = out_root or f"{root}_compact"
-    if os.path.isdir(os.path.join(out_root, "buckets")):
-        return out_root
-    buckets = spark.read.schema(MINHASH_BUCKET_SCHEMA).parquet(
-        os.path.join(root, "buckets")
-    )
-    shingles = spark.read.schema(MINHASH_SHINGLE_SCHEMA).parquet(
-        os.path.join(root, "shingles")
-    )
-    stage = tempfile.mkdtemp(prefix="minhash_compact_")
-    (
-        buckets.repartition("band")
-        .write.mode("overwrite")
-        .partitionBy("band")
-        .parquet(os.path.join(stage, "buckets"))
-    )
-    shingles.repartition(4).write.mode("overwrite").parquet(
-        os.path.join(stage, "shingles")
-    )
-    from minimapreduce_spark.artifacts import claim_parent
-
-    claim_parent(stage, root)  # retention derivation claim
-    try:
-        os.rename(stage, out_root)
-    except OSError:
-        shutil.rmtree(stage, ignore_errors=True)  # lost the race
-    return out_root
+    return publish(out_root, "minhash_band_index", write, parent=root)
 
 
 @register(
@@ -1078,14 +1009,7 @@ def minhash_index_compact_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, day1, base_root, tag=f"day1m{APPEND_DAY_MOD}"
     )
     root = minhash_index_compact(spark, appended)
-    idx_buckets = (
-        spark.read.schema(MINHASH_BUCKET_SCHEMA)
-        .parquet(os.path.join(root, "buckets"))
-        .select("doc_id", F.col("band").cast("int").alias("band"), "bh")
-    )
-    idx_shingles = spark.read.schema(MINHASH_SHINGLE_SCHEMA).parquet(
-        os.path.join(root, "shingles")
-    )
+    idx_buckets, idx_shingles = read_minhash_index(spark, root)
     day2 = docs.where(F.col("doc_id") % APPEND_DAY_MOD == INCR_BATCH_MOD)
     buckets_b, shingles_b = _batch_band_frames(spark, sf_dir, day2)
     return probe_band_index(
@@ -1142,14 +1066,7 @@ def minhash_index_append_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_root = minhash_index_build(spark, sf_dir)
     day1 = docs.where(F.col("doc_id") % APPEND_DAY_MOD == 0)
     root = minhash_index_append(spark, sf_dir, day1, base_root, tag=f"day1m{APPEND_DAY_MOD}")
-    idx_buckets = (
-        spark.read.schema(MINHASH_BUCKET_SCHEMA)
-        .parquet(os.path.join(root, "buckets"))
-        .select("doc_id", F.col("band").cast("int").alias("band"), "bh")
-    )
-    idx_shingles = spark.read.schema(MINHASH_SHINGLE_SCHEMA).parquet(
-        os.path.join(root, "shingles")
-    )
+    idx_buckets, idx_shingles = read_minhash_index(spark, root)
     day2 = docs.where(F.col("doc_id") % APPEND_DAY_MOD == INCR_BATCH_MOD)
     buckets_b, shingles_b = _batch_band_frames(spark, sf_dir, day2)
     return probe_band_index(

@@ -313,9 +313,9 @@ def stream_minhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     append-only parquet, which is how a restartable ingest tier keeps
     it (re-deriving from the checkpoint offsets on recovery)."""
     from minimapreduce_spark.catalog import fan_out, load_table
+    from minimapreduce_spark.artifacts import read_minhash_index
     from minimapreduce_spark.operators.dedup import (
         INCR_BATCH_MOD,
-        MINHASH_BUCKET_SCHEMA,
         MINHASH_SHINGLE_SCHEMA,
         minhash_band_buckets,
         minhash_index_build,
@@ -342,14 +342,7 @@ def stream_minhash_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from minimapreduce_spark.session import narrow_clone
 
     spark = narrow_clone(spark, 8)
-    idx_buckets = (
-        spark.read.schema(MINHASH_BUCKET_SCHEMA)
-        .parquet(os.path.join(root, "buckets"))
-        .select("doc_id", F.col("band").cast("int").alias("band"), "bh")
-    )
-    idx_shingles = spark.read.schema(MINHASH_SHINGLE_SCHEMA).parquet(
-        os.path.join(root, "shingles")
-    )
+    idx_buckets, idx_shingles = read_minhash_index(spark, root)
 
     work = os.path.join(
         tempfile.gettempdir(), "minimapreduce_dedup_probe", uuid.uuid4().hex
@@ -845,27 +838,20 @@ def stream_join_view_rebuild(
     of the streaming IVM cycle: `stream_incremental_join_view` drains
     the day's dim CDC into tombstone + delta logs and composes the
     maintained view; this job materializes that composition into a
-    FRESH base-view artifact (atomic-rename publish, the
-    `join_view_rebuild` discipline), after which the logs are obsolete
-    — the next day's CDC maintains against the new base with an empty
-    tombstone set. Idempotent: an existing published root is returned
-    untouched (the re-publish race loses by rename)."""
+    FRESH base-view artifact (published by `artifacts.publish`,
+    claiming the base view as parent — the `join_view_rebuild`
+    lifecycle), after which the logs are obsolete — the next day's CDC
+    maintains against the new base with an empty tombstone set.
+    Idempotent: an existing published root is returned untouched."""
+    from minimapreduce_spark.artifacts import publish
     from minimapreduce_spark.operators.relational import join_view_root
 
-    root = root or f"{join_view_root(sf_dir)}_stream_rebuilt"
-    if os.path.isdir(os.path.join(root, "view")):
-        return root
-    maintained = stream_incremental_join_view(spark, sf_dir)
-    stage = tempfile.mkdtemp(prefix="joinview_stream_rebuild_")
-    maintained.write.mode("overwrite").parquet(os.path.join(stage, "view"))
-    from minimapreduce_spark.artifacts import claim_parent
+    def write(stage: str) -> None:
+        maintained = stream_incremental_join_view(spark, sf_dir)
+        maintained.write.mode("overwrite").parquet(os.path.join(stage, "view"))
 
-    claim_parent(stage, join_view_root(sf_dir))  # retention derivation claim
-    try:
-        os.rename(stage, root)
-    except OSError:
-        shutil.rmtree(stage, ignore_errors=True)  # lost the race
-    return root
+    base = join_view_root(sf_dir)
+    return publish(root or f"{base}_stream_rebuilt", "join_view", write, parent=base)
 
 
 @register(

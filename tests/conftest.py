@@ -85,3 +85,18 @@ def run_and_compare(spark, duck, name: str, sf_dir: str = SF_DIR) -> None:
     spark_pdf = query.fn(spark, sf_dir).toPandas()
     oracle_pdf = duck.execute(query.oracle).df()
     assert_frames_match(spark_pdf, oracle_pdf, name=name)
+
+
+def input_paths(df) -> list[str]:
+    """Real local paths of every file ``df`` scans (`DataFrame.inputFiles`),
+    uncut — unlike a plan string, whose scan ``Location`` Spark truncates
+    at ``spark.sql.maxMetadataStringLength``."""
+    from urllib.parse import unquote, urlparse
+
+    return [os.path.realpath(unquote(urlparse(f).path)) for f in df.inputFiles()]
+
+
+def under(path: str, root: str) -> bool:
+    """True iff ``path`` is ``root`` or lies inside it."""
+    root = os.path.realpath(root)
+    return path == root or path.startswith(root + os.sep)

@@ -6,16 +6,87 @@ pinned here are the ones `artifacts.vacuum_superseded_roots` documents:
 only published, superseded, old-enough roots are deleted; leaves and
 in-flight directories never are; and the hardlink fold-in discipline
 makes deleting a superseded base SAFE while a derived root serves —
-the derived root's hardlinks keep every shared inode alive.
+the derived root's hardlinks keep every shared inode alive. The
+`artifacts.publish` failure modes are pinned first, without Spark.
 """
 
 from __future__ import annotations
 
+import errno
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
+
+
+def _write_view(text):
+    """A `publish` write callback producing a join-view-shaped stage."""
+
+    def write(stage):
+        os.makedirs(os.path.join(stage, "view"))
+        with open(os.path.join(stage, "view", "part.parquet"), "w") as f:
+            f.write(text)
+
+    return write
+
+
+def test_publish_failed_rename_raises_and_leaves_no_stage(tmp_path, monkeypatch):
+    """A rename that fails for any reason but a lost race (here EXDEV,
+    a cross-device stage) is an error: `publish` raises it and removes
+    its stage, instead of returning a root that does not exist."""
+    from minimapreduce_spark import artifacts
+
+    def exdev(src, dst):
+        raise OSError(errno.EXDEV, os.strerror(errno.EXDEV), src, None, dst)
+
+    monkeypatch.setattr(artifacts.os, "rename", exdev)
+    root = str(tmp_path / "minimapreduce_joinview_t")
+    with pytest.raises(OSError) as err:
+        artifacts.publish(root, "join_view", _write_view("ours"))
+    assert err.value.errno == errno.EXDEV
+    assert os.listdir(tmp_path) == []
+
+
+def test_publish_lost_race_serves_rival_and_removes_stage(tmp_path):
+    """A rival publishing the root between the marker check and the
+    rename wins: `publish` returns the root with the rival's content
+    untouched and removes its own stage. The stage sits beside the
+    root (same filesystem) under a name no family prefix matches."""
+    from minimapreduce_spark.artifacts import FAMILIES, publish
+
+    root = str(tmp_path / "minimapreduce_joinview_t")
+    rival = _write_view("rival")
+
+    def ours(stage):
+        assert os.path.dirname(stage) == str(tmp_path)
+        assert not os.path.basename(stage).startswith(
+            tuple(prefix for prefix, _ in FAMILIES.values())
+        )
+        _write_view("ours")(stage)
+        assert publish(root, "join_view", rival, parent=root + "_base") == root
+
+    assert publish(root, "join_view", ours, parent=root + "_base") == root
+    with open(os.path.join(root, "view", "part.parquet")) as f:
+        assert f.read() == "rival"
+    assert os.listdir(tmp_path) == [os.path.basename(root)]
+
+
+def test_publish_returns_published_root_without_writing(tmp_path):
+    """An already-published root (family marker present) is returned
+    at once: the write callback — all of a builder's Spark work — never
+    runs, and nothing is staged."""
+    from minimapreduce_spark.artifacts import PARENT_MARKER, publish
+
+    root = str(tmp_path / "minimapreduce_joinview_t")
+    assert publish(root, "join_view", _write_view("first"), parent="p") == root
+    with open(os.path.join(root, PARENT_MARKER)) as f:
+        assert f.read() == "p"
+    calls = []
+    assert publish(root, "join_view", calls.append) == root
+    assert calls == []
+    assert os.listdir(tmp_path) == [os.path.basename(root)]
 
 
 def _read_index(spark, root):

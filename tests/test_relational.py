@@ -228,8 +228,12 @@ def test_incremental_join_view_rebuild_one_scan_zero_joins(spark, tmp_path):
 
     from minimapreduce_spark import plans
     from minimapreduce_spark import queries as q
-    from minimapreduce_spark.operators.relational import join_view_rebuild
-    from tests.conftest import SF_DIR
+    from minimapreduce_spark.catalog import table_path
+    from minimapreduce_spark.operators.relational import (
+        join_view_rebuild,
+        join_view_root,
+    )
+    from tests.conftest import SF_DIR, input_paths, under
 
     # (a) rebuilt-read ≡ maintained-read, via an isolated root
     root = join_view_rebuild(spark, SF_DIR, root=str(tmp_path / "rebuilt"))
@@ -241,12 +245,16 @@ def test_incremental_join_view_rebuild_one_scan_zero_joins(spark, tmp_path):
     want = set(map(tuple, maintained.collect()))
     assert got == want and len(got) == served.count()
 
-    # (b) registered plan: one artifact scan, zero joins of any kind
-    plan = plans.simple_plan(q.queries()["incremental_join_view_rebuild"](spark, SF_DIR))
-    assert "_rebuilt" in plan
+    # (b) registered plan: one artifact scan, zero joins of any kind —
+    # every input file lies under the published rebuilt root
+    served = q.queries()["incremental_join_view_rebuild"](spark, SF_DIR)
+    plan = plans.simple_plan(served)
     assert "Join" not in plan and "LeftAnti" not in plan
-    for base in ("orders.parquet", "customer.parquet"):
-        assert base not in plan, f"rebuild read must not rescan {base}"
+    published = f"{join_view_root(SF_DIR)}_rebuilt"
+    files = input_paths(served)
+    assert files and all(under(f, published) for f in files), files
+    for src in (table_path(SF_DIR, "orders"), table_path(SF_DIR, "customer")):
+        assert not any(under(f, src) for f in files), f"rescans {src}"
 
     # (c) idempotent re-publish
     before = _os.stat(root).st_mtime_ns

@@ -948,9 +948,13 @@ def test_stream_ivm_rebuild_one_scan_and_idempotent(spark, tmp_path):
 
     from minimapreduce_spark import plans
     from minimapreduce_spark import queries as q
-    from minimapreduce_spark.operators.relational import IVM_VIEW_SCHEMA
+    from minimapreduce_spark.catalog import table_path
+    from minimapreduce_spark.operators.relational import (
+        IVM_VIEW_SCHEMA,
+        join_view_root,
+    )
     from minimapreduce_spark.streaming.upsert import stream_join_view_rebuild
-    from tests.conftest import SF_DIR
+    from tests.conftest import SF_DIR, input_paths, under
 
     # (a) fold to an isolated root, compare to the batch twin
     root = stream_join_view_rebuild(spark, SF_DIR, root=str(tmp_path / "srb"))
@@ -960,14 +964,18 @@ def test_stream_ivm_rebuild_one_scan_and_idempotent(spark, tmp_path):
     want = set(map(tuple, batch.collect()))
     assert got == want and len(got) == served.count()
 
-    # (b) registered plan: one artifact scan, zero joins, no logs
-    plan = plans.simple_plan(
-        q.queries()["stream_incremental_join_view_rebuild"](spark, SF_DIR)
-    )
-    assert "_stream_rebuilt" in plan
+    # (b) registered plan: one artifact scan, zero joins, no logs —
+    # every input file lies under the published stream-rebuilt root
+    served = q.queries()["stream_incremental_join_view_rebuild"](spark, SF_DIR)
+    plan = plans.simple_plan(served)
     assert "Join" not in plan and "LeftAnti" not in plan
-    for src in ("orders.parquet", "customer.parquet", "tombs", "delta"):
-        assert src not in plan, f"rebuild read must not rescan {src}"
+    published = f"{join_view_root(SF_DIR)}_stream_rebuilt"
+    files = input_paths(served)
+    assert files and all(under(f, published) for f in files), files
+    for src in (table_path(SF_DIR, "orders"), table_path(SF_DIR, "customer")):
+        assert not any(under(f, src) for f in files), f"rescans {src}"
+    for log in ("tombs", "delta"):
+        assert not any(log in f.split(_os.sep) for f in files), f"reads {log}"
 
     # (c) idempotent re-publish
     before = _os.stat(root).st_mtime_ns
